@@ -35,8 +35,7 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
                           bbox: tuple[float, float, float, float] = TW_BBOX,
                           country_code: str = "TW",
                           res: int = 10, knn_res: int = 10,
-                          knn_k: int = 1,
-                          geo_engine: str = "arrow") -> DataFrame:
+                          knn_k: int = 1) -> DataFrame:
     # res 10 ⇒ k=1 exactness guard ≈ 17.6 km > the 12.2 km worst-case
     # nearest-centroid distance of the village tiling, so virtually every
     # row settles in the zero-shuffle static path — one broadcast join +
@@ -53,16 +52,7 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
     # reach inside mapInPandas — the text pass (tag-strip + entities + ws
     # regexes per page) would otherwise run for every page only to be
     # dropped, and at a global corpus vs a Taiwan bbox that is ~all of it
-    # geo_engine="jvm" swaps the Arrow extract kernel for the zero-Python
-    # regexp_extract twin (extract.html_meta.extract_geo_jvm) — equivalence-
-    # pinned; serves executors whose cores can't afford a Python worker per
-    # task (see COVERAGE.md and the pinned-scaling A/B in BENCH/BASELINE.md)
-    ext = extract_pages(pages, with_text=False,
-                        geo_engine=geo_engine).observe(
-        "extract_metrics",
-        F.count(F.lit(1)).alias("pages_extracted"),
-        F.count(F.col("lat")).alias("pages_with_geo"))
-    pts = (ext
+    pts = (extract_pages(pages, with_text=False)
            .filter(F.col("lat").isNotNull() & F.col("lon").isNotNull())
            .filter(in_bbox(F.col("lat"), F.col("lon"), bbox))
            # explicit exchange: (a) separates the extract mapInPandas and the

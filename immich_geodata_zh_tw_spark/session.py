@@ -56,17 +56,14 @@ def get_spark(app_name: str = "immich-geodata-zh-tw-spark",
     if shuffle_partitions is None:
         shuffle_partitions = max(parallelism, 4)
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    advisory_mb = os.environ.get(
-        "SPARK_GRAFT_ADVISORY_PARTITION_MB",
-        str(_advisory_partition_mb(_parse_mem_mb(driver_mem), parallelism)))
+    advisory_mb = _advisory_partition_mb(_parse_mem_mb(driver_mem), parallelism)
     # reduce-side width must be bounded by DATA/advisory, not by the core
     # count: with the default (initialPartitionNum = shuffle.partitions) a
     # 100 GB shuffle on 32 cores gets 3 GB partitions no matter what the
     # advisory says, and the sort+agg stage OOMs.  Starting wide costs
     # nothing at small scale — AQE coalesces back down to advisory-sized
     # partitions — and keeps per-task input flat as the corpus grows.
-    initial_partitions = os.environ.get(
-        "SPARK_GRAFT_INIT_PARTITIONS", str(max(32 * parallelism, 1024)))
+    initial_partitions = max(32 * parallelism, 1024)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{parallelism}]")
@@ -75,7 +72,7 @@ def get_spark(app_name: str = "immich-geodata-zh-tw-spark",
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                initial_partitions)
+                str(initial_partitions))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
                 f"{advisory_mb}m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -98,10 +95,8 @@ def get_spark(app_name: str = "immich-geodata-zh-tw-spark",
         # case but a 27 s full-GC outlier; 16g: 4.6-5.4 s consistently)
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # UI off by default (costs listener overhead at bench time); the
-        # stage-decomposition diagnostic (bench/stage_decompose.py) flips
-        # it on to read per-stage times from the REST API
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # UI off: its listeners cost overhead at bench time
+        .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
     _ship_package(spark)
