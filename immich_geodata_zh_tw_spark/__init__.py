@@ -11,6 +11,8 @@ builds Immich's reverse-geocode data) as a distributed, Spark-first engine:
 * the reference's tabular operator inventory (SURVEY.md §2) as DataFrame plans
 * web-scale extract stage: Arrow UDFs over ``html:binary`` pages
 * skew handling (salting + adaptive cell splitting) and manifest-based resume
+* incremental ingest: the same reverse-geocode plan over newly arrived pages
+  files via Structured Streaming (``streaming/pipeline.py``)
 
 Everything is built on public PySpark APIs; geometry kernels are dependency-free
 numpy (no shapely/h3/pyproj in this environment).

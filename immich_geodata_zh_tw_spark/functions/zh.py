@@ -533,11 +533,6 @@ def is_chinese(col: Column) -> Column:
     return col.rlike(IS_CHINESE_RE_SPARK)
 
 
-def include_chinese(col: Column) -> Column:
-    """String contains at least one Han character (translate.py:58-69)."""
-    return col.rlike(HAS_CHINESE_RE_SPARK)
-
-
 def is_traditional(col: Column) -> Column:
     """Reference is_traditional_chinese (translate.py:86-97):
     is_chinese ∧ s2t-fixpoint."""

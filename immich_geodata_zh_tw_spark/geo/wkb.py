@@ -82,11 +82,3 @@ def decode(buf: bytes) -> list[np.ndarray]:
             rings.extend(sub)
         return rings
     raise ValueError(f"unsupported WKB geometry type {geom_type}")
-
-
-def bounds(buf: bytes) -> tuple[float, float, float, float]:
-    """(lon_min, lat_min, lon_max, lat_max) of a WKB geometry."""
-    rings = decode(buf)
-    pts = np.vstack(rings)
-    return (float(pts[:, 0].min()), float(pts[:, 1].min()),
-            float(pts[:, 0].max()), float(pts[:, 1].max()))

@@ -269,14 +269,6 @@ def _pairs_from_bands(bands: DataFrame, *, id_col: str,
             .distinct())
 
 
-def shingle_set_expr(text_col: str, *, shingle: int = 5, stride: int = 2) -> str:
-    """Distinct character n-gram set as one JVM expression (Spark SQL text;
-    DuckDB twin uses list_distinct/list_transform/generate_series)."""
-    return (f"array_distinct(transform(sequence(1, "
-            f"greatest(length({text_col}) - {shingle - 1}, 1), {stride}), "
-            f"i -> substring({text_col}, i, {shingle})))")
-
-
 def hashed_shingle_set_expr(text_col: str, *, shingle: int = 5,
                             stride: int = 2, dialect: str = "spark") -> str:
     """Distinct shingle set as 60-bit md5-prefix BIGINTs.

@@ -1,14 +1,11 @@
-"""Set/merge operators (SURVEY.md §2.7 U1-U3, §2.2 P5/J6).
+"""Set/merge operators (SURVEY.md §2.7 U3, §2.2 J1).
 
 Reference semantics: replace-by-key delete+insert (base.py:694-722,
-enhance_data.py:137-142), schema-aligned vertical union (base.py:718),
-anti-join merge of new rows above a population floor (enhance_data.py:262-265
-— an ``is_in`` that must be a left_anti join at scale).
+enhance_data.py:137-142), duplicate-marker join (japan.py:281-307) and the
+release-to-release diff.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -21,21 +18,6 @@ def replace_by_key(old: DataFrame, new: DataFrame, predicate: Column) -> DataFra
     it is filter + unionByName (both narrow — no shuffle).
     """
     return old.filter(~predicate).unionByName(new)
-
-
-def union_all(dfs: list[DataFrame]) -> DataFrame:
-    return reduce(lambda a, b: a.unionByName(b), dfs)
-
-
-def anti_join_merge(existing: DataFrame, extra: DataFrame, *, key: str,
-                    min_population: int | None = None,
-                    population_col: str = "population") -> DataFrame:
-    """Add rows of ``extra`` whose key is absent from ``existing``
-    (and above the population floor), reference enhance_data.py:247-268."""
-    new_rows = extra.join(existing.select(key), key, "left_anti")
-    if min_population is not None:
-        new_rows = new_rows.filter(F.col(population_col) >= F.lit(min_population))
-    return existing.unionByName(new_rows)
 
 
 def marker_join(df: DataFrame, dup_keys: list[str], *,

@@ -63,14 +63,12 @@ def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
              lat_col: str = "lat", lon_col: str = "lon",
              id_col: str = "poly_id", wkb_col: str = "geometry_wkb",
              attr_cols: list[str] | None = None,
-             res: int = grid.DEFAULT_RES, how: str = "inner",
-             point_id: str | None = None) -> DataFrame:
+             res: int = grid.DEFAULT_RES) -> DataFrame:
     """Assign each point its containing polygon's id + attributes.
 
-    ``how='inner'`` drops points in no polygon; ``'left'`` keeps them with
-    null attributes (requires ``point_id``, a unique point key).  Polygons
-    must not overlap (admin tilings don't); if they did, a point would emit
-    one row per containing polygon.
+    Inner join: points in no polygon are dropped.  Polygons must not
+    overlap (admin tilings don't); if they did, a point would emit one row
+    per containing polygon.
     """
     if attr_cols is None:
         attr_cols = [c for c in polys_pdf.columns if c not in (id_col, wkb_col)]
@@ -119,11 +117,4 @@ def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
     if attr_cols:
         attrs = spark.createDataFrame(polys_pdf[[id_col, *attr_cols]])
         hit = hit.join(F.broadcast(attrs), id_col, "left")
-    if how == "inner":
-        return hit
-    if how == "left":
-        if point_id is None:
-            raise ValueError("how='left' requires point_id (unique point key)")
-        return points.join(hit.select(point_id, id_col, *attr_cols),
-                           point_id, "left")
-    raise ValueError(f"unsupported how={how!r}")
+    return hit

@@ -752,19 +752,6 @@ def _asof_errors_to_clicks(spark, sf_dir, *, tolerance=None, events=None):
                     F.col("r_value").alias("sum_value")))
 
 
-def q_asof_backward(spark, sf_dir):
-    """As-of join (backward, inclusive): the click context preceding each
-    error — DuckDB's native ASOF LEFT JOIN is the oracle."""
-    return _asof_errors_to_clicks(spark, sf_dir)
-
-
-def q_asof_tolerance(spark, sf_dir):
-    """As-of join with a 30-minute tolerance: stale matches null out as a
-    pure projection over the backward match (the newest candidate missing
-    the window proves no candidate makes it)."""
-    return _asof_errors_to_clicks(spark, sf_dir, tolerance=_ASOF_TOL_S)
-
-
 # DuckDB ASOF LEFT JOIN is inclusive (e.ts >= c.ts picks the greatest
 # qualifying c.ts) — the operator's equal-``on`` right-before-left tie rule
 # matches it by construction.  r_value is carried VERBATIM (no arithmetic),
@@ -814,36 +801,6 @@ FROM documents GROUP BY 1
 """
 
 
-def q_doc_text_stats(spark, sf_dir):
-    """Token count / punct / digit / stopword / quality score — all JVM SQL."""
-    d = _t(spark, sf_dir, "documents")
-    return textstats.with_text_stats(d, "text").select(
-        "doc_id", "n_tokens", "punct_ratio", "digit_ratio",
-        "stopword_hits", "quality_score")
-
-
-SQL_DOC_TEXT_STATS = f"""
-SELECT doc_id,
-       {textstats.token_count_sql('text')} AS n_tokens,
-       {textstats.punct_ratio_sql('text')} AS punct_ratio,
-       {textstats.digit_ratio_sql('text')} AS digit_ratio,
-       {textstats.stopword_hits_sql('en', 'text')} AS stopword_hits,
-       {textstats.quality_score_sql('text')} AS quality_score
-FROM documents
-"""
-
-
-def q_doc_langid(spark, sf_dir):
-    """Stopword-vote language ID."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", textstats.predict_lang("text").alias("pred_lang"))
-
-
-SQL_DOC_LANGID = f"""
-SELECT doc_id, {textstats.predict_lang_sql('text')} AS pred_lang FROM documents
-"""
-
-
 def q_doc_minhash_pairs(spark, sf_dir):
     """MinHash-LSH near-dup candidate pairs (4 bands, 5-char shingles)."""
     d = _t_wide(spark, sf_dir, "documents")
@@ -877,25 +834,6 @@ bands AS (
 SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
 FROM bands l JOIN bands r ON l.band_idx = r.band_idx AND l.sig = r.sig
 WHERE l.doc_id < r.doc_id
-"""
-
-
-def q_doc_bpe_tokens(spark, sf_dir):
-    """BPE-ish token counting (GPT-2-style pre-tokenizer pieces) next to the
-    whitespace count — both pure regex/JVM, no UDF."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.expr(textstats.token_count_sql("text")).alias("ws_tokens"),
-        F.expr(textstats.bpe_token_count_sql("text", dialect="spark"))
-        .alias("bpe_tokens"))
-
-
-SQL_DOC_BPE_TOKENS = f"""
-SELECT doc_id,
-       {textstats.token_count_sql('text')} AS ws_tokens,
-       {textstats.bpe_token_count_sql('text', dialect='duckdb')} AS bpe_tokens
-FROM documents
 """
 
 
@@ -3522,7 +3460,7 @@ def q_windows_compound(spark, sf_dir):
     """Sessionization (lag + gap cumsum) ∪ tumbling 1-hour window agg ∪
     as-of join (backward + tolerance) as one union-typed result (folds
     sessionize/tumbling_window/asof_backward/asof_tolerance; each branch is
-    the standalone query's plan)."""
+    that operation's full plan)."""
     null_l = F.lit(None).cast("long")
     # ONE events reader shared by all four branches: each standalone
     # builder would re-read the parquet footer (~0.07 s of construction

@@ -1,1 +1,1 @@
-"""Structured-Streaming wrappers for incremental ingest."""
+"""Structured-Streaming incremental ingest: ``incremental_reverse_geocode``."""

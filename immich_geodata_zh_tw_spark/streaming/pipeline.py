@@ -30,8 +30,7 @@ from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
-                               StructType,
+from pyspark.sql.types import (BinaryType, StringType, StructField, StructType,
                                TimestampType)
 
 PAGES_SCHEMA = StructType([
@@ -43,22 +42,16 @@ PAGES_SCHEMA = StructType([
 ])
 
 
-def _run_incremental(spark: SparkSession, *, schema: StructType,
-                     input_path: str, output_path: str, checkpoint_path: str,
-                     batch_transform, available_now: bool,
-                     stream_transform=None):
-    """ONE copy of the incremental-pipeline contract shared by every
-    composed pipeline in this module — fresh-checkpoint output-lineage
-    scoping (module docstring; round-2 VERDICT item 10), the file-stream
-    reader, the idempotent ``batch_id``-scoped overwrite sink, and the
-    ``Trigger.AvailableNow`` wiring — so a fix to any part of the contract
-    cannot drift between pipelines.
+def incremental_reverse_geocode(spark: SparkSession, *, input_path: str,
+                                output_path: str, checkpoint_path: str,
+                                polys_pdf: pd.DataFrame, cities_pdf: pd.DataFrame):
+    """Stream new pages files into reverse-geocoded parquet output.
 
-    ``stream_transform`` (optional) maps the raw stream DataFrame to the
-    streaming query to run (e.g. a stateful stage whose state rides this
-    checkpoint); ``batch_transform(batch_df)`` maps each micro-batch to
-    the rows written under ``output_path/batch_id=N``.
+    Returns the StreamingQuery, which drains all unprocessed files and
+    stops (call ``awaitTermination()``).
     """
+    from ..plans.reverse_geocode import reverse_geocode_pages
+
     # fresh checkpoint (no committed offsets) ⇒ no prior output of THIS
     # lineage can exist — clear orphans from any earlier lineage so reads
     # never mix runs
@@ -66,79 +59,17 @@ def _run_incremental(spark: SparkSession, *, schema: StructType,
         shutil.rmtree(output_path, ignore_errors=True)
 
     stream = (spark.readStream
-              .schema(schema)
+              .schema(PAGES_SCHEMA)
               .option("maxFilesPerTrigger", 64)
               .parquet(input_path))
-    if stream_transform is not None:
-        stream = stream_transform(stream)
 
     def process_batch(batch_df, batch_id: int) -> None:
-        out = batch_transform(batch_df)
+        out = reverse_geocode_pages(spark, batch_df, polys_pdf, cities_pdf)
         # idempotent per-batch sink: retried batches overwrite, never append
         out.write.mode("overwrite").parquet(f"{output_path}/batch_id={batch_id}")
 
-    writer = (stream.writeStream
-              .foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def incremental_reverse_geocode(spark: SparkSession, *, input_path: str,
-                                output_path: str, checkpoint_path: str,
-                                polys_pdf: pd.DataFrame, cities_pdf: pd.DataFrame,
-                                available_now: bool = True):
-    """Stream new pages files into reverse-geocoded parquet output.
-
-    Returns the StreamingQuery; with ``available_now`` the query drains all
-    unprocessed files and stops (call ``awaitTermination()``).
-    """
-    from ..plans.reverse_geocode import reverse_geocode_pages
-
-    return _run_incremental(
-        spark, schema=PAGES_SCHEMA, input_path=input_path,
-        output_path=output_path, checkpoint_path=checkpoint_path,
-        batch_transform=lambda bdf: reverse_geocode_pages(
-            spark, bdf, polys_pdf, cities_pdf),
-        available_now=available_now)
-
-
-NEARDUP_DOCS_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("ts", TimestampType()),
-    StructField("text", StringType()),
-])
-
-
-def incremental_neardup(spark: SparkSession, *, input_path: str,
-                        output_path: str, checkpoint_path: str,
-                        available_now: bool = True,
-                        **neardup_kw):
-    """Deployable end-to-end incremental near-dedup: file stream →
-    :func:`~.stateful.streaming_neardup_flags` (per-band-signature LSH
-    state, event-time-TTL evicted) → per-doc ``neardup_verdicts`` rollup +
-    idempotent ``batch_id``-scoped parquet sink inside ``foreachBatch``.
-
-    Composition notes: the stateful flags stage lives in the streaming
-    query (its state rides this checkpoint); the rollup is a PLAIN batch
-    aggregation inside ``foreachBatch``, exact per micro-batch because all
-    of a doc's band rows share its batch.  Sink idempotency, output
-    lineage scoping and ``Trigger.AvailableNow`` resumability are the same
-    contract as :func:`incremental_reverse_geocode` (module docstring).
-
-    Every input doc appears in the output exactly once per arrival —
-    null-text docs ride the flags operator's stateless pass-through branch
-    and come out ``kept=true`` (never silently dropped).
-
-    Returns the StreamingQuery.  Extra kwargs (``horizon``, ``watermark``,
-    ``n_bands``, ``shingle``…) pass through to the flags operator.
-    """
-    from .stateful import neardup_verdicts, streaming_neardup_flags
-
-    return _run_incremental(
-        spark, schema=NEARDUP_DOCS_SCHEMA, input_path=input_path,
-        output_path=output_path, checkpoint_path=checkpoint_path,
-        stream_transform=lambda s: streaming_neardup_flags(s, **neardup_kw),
-        batch_transform=neardup_verdicts,
-        available_now=available_now)
+    return (stream.writeStream
+            .foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint_path)
+            .trigger(availableNow=True)
+            .start())

@@ -202,49 +202,3 @@ class TestStreamingIngest:
         assert out.count() == n1  # no doubled rows from orphaned dirs
         assert out.select("url").distinct().count() == out.count()
 
-
-class TestIncrementalNeardup:
-    def test_end_to_end_verdicts_resume(self, spark, tmp_path):
-        """Composed pipeline: stateful LSH flags + per-doc rollup +
-        idempotent batch-scoped sink; a restart drains only new files and
-        flags a cross-batch near-identical recrawl against the original."""
-        import pandas as pd
-
-        from immich_geodata_zh_tw_spark.streaming.pipeline import (
-            NEARDUP_DOCS_SCHEMA, incremental_neardup)
-
-        from conftest import (NEARDUP_TXT_X as x, NEARDUP_TXT_X2 as x2,
-                              NEARDUP_TXT_Y as y)
-
-        inp = str(tmp_path / "in")
-        outp = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def write(rows):
-            pdf = pd.DataFrame(rows, columns=["doc_id", "ts", "text"])
-            pdf["ts"] = pd.to_datetime(pdf["ts"])
-            (spark.createDataFrame(pdf, schema=NEARDUP_DOCS_SCHEMA)
-             .coalesce(1).write.mode("append").parquet(inp))
-
-        write([(1, "2026-01-01 10:00:00", x),
-               (3, "2026-01-01 10:10:00", y),
-               (7, "2026-01-01 10:11:00", None)])
-        q = incremental_neardup(spark, input_path=inp, output_path=outp,
-                                checkpoint_path=ckpt, horizon="24 hours")
-        q.awaitTermination(120)
-        got1 = spark.read.parquet(outp).toPandas().set_index("doc_id")
-        assert bool(got1.loc[1, "kept"]) and bool(got1.loc[3, "kept"])
-        # null-text docs must come through the DEPLOYED pipeline as kept,
-        # not be silently dropped by the band explode
-        assert bool(got1.loc[7, "kept"])
-
-        # restart with one new file: the edited recrawl is flagged against
-        # doc 1 via state carried in the checkpoint; old batches not redone
-        write([(2, "2026-01-01 10:30:00", x2)])
-        q2 = incremental_neardup(spark, input_path=inp, output_path=outp,
-                                 checkpoint_path=ckpt, horizon="24 hours")
-        q2.awaitTermination(120)
-        got2 = (spark.read.parquet(outp).toPandas()
-                .sort_values("doc_id").set_index("doc_id"))
-        assert got2.index.tolist() == [1, 2, 3, 7]
-        assert not bool(got2.loc[2, "kept"]) and got2.loc[2, "dup_of"] == 1

@@ -249,18 +249,6 @@ class TestPipJoin:
         # sanity: nearly every in-bbox point is inside some village
         assert len(out) >= 0.95 * n
 
-    def test_left_join_keeps_outside_points(self, spark):
-        polys = polygons.admin_polygons_pdf(village_grid=2)
-        polys = polys.reset_index().rename(columns={"index": "poly_id"})
-        pts = spark.createDataFrame(pd.DataFrame(
-            {"pid": [0, 1], "lat": [23.0, 50.0], "lon": [121.0, 10.0]}))
-        out = pipjoin.pip_join(spark, pts, polys, id_col="poly_id",
-                               attr_cols=["county"], res=8, how="left",
-                               point_id="pid").toPandas().sort_values("pid")
-        assert len(out) == 2
-        assert out.iloc[0]["county"] is not None
-        assert out.iloc[1]["county"] is None
-
     def test_enclave_multipolygon(self, spark):
         polys = polygons.admin_polygons_pdf(village_grid=5)
         polys = polys.reset_index().rename(columns={"index": "poly_id"})
