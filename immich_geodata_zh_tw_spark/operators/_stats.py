@@ -77,14 +77,6 @@ def hint_if_large(derived: DataFrame, source: DataFrame, *,
     Python UDF) gets a spill-safe ``merge`` hint unless ``source``'s
     estimate × ``fanout`` fits under the session broadcast threshold
     (module docstring: why merge and not shuffle_hash)."""
-    try:
-        raw = source.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold")
-    except Exception:
-        raw = None
-    thr = _parse_bytes(raw) if raw is not None else None
-    est = estimated_bytes(source)
-    if thr is not None and thr > 0 and est is not None \
-            and est * fanout <= thr:
+    if broadcast_budget_ok(source, fanout=fanout):
         return derived
     return derived.hint("merge")

@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 
 from ..functions.geo import cell_expr
 from ..geo import grid
+from ..geo.distance import haversine_sql
+from ..session import local_dim_df
 
 _DEG_KM = math.pi / 180.0 * 6371.0088  # km per degree of great-circle arc
 
@@ -48,31 +50,21 @@ _DEG_KM = math.pi / 180.0 * 6371.0088  # km per degree of great-circle arc
 _GUARD_SAFETY = 0.999
 
 
-def explode_places_by_kring(spark: SparkSession, places_pdf, *,
-                            lat_col: str, lon_col: str,
-                            res: int, k: int) -> DataFrame:
-    """Small-side prep: one row per (place, covered cell), as a Spark DF.
+def _ring_cells_pdf(places_pdf, *, lat_col: str, lon_col: str,
+                    res: int, k: int):
+    """Small-side prep: one row per (place, covered cell), driver-side numpy.
 
-    ``places_pdf`` is a pandas DataFrame (broadcast-scale by contract).
-    Adds ``cell`` (the covering cell) and ``ring`` (Chebyshev cell distance
-    from the place's own cell to that covering cell — equal to the query→place
-    cell distance when a query in ``cell`` probes this row).
+    Adds ``cell``, the covering cell a query probes to find this place.
     """
     cells = grid.cell_of(places_pdf[lat_col].to_numpy(),
                          places_pdf[lon_col].to_numpy(), res)
     rings = grid.k_ring(cells, k)  # (n, (2k+1)^2)
-    n, m = rings.shape
-    offs = np.arange(-k, k + 1, dtype=np.int64)
-    drow = np.repeat(offs, 2 * k + 1)
-    dcol = np.tile(offs, 2 * k + 1)
-    cheb = np.maximum(np.abs(drow), np.abs(dcol))  # (m,)
-    idx = np.repeat(np.arange(n), m)
+    idx = np.repeat(np.arange(rings.shape[0]), rings.shape[1])
     flat = rings.ravel()
     keep = flat >= 0
     out = places_pdf.iloc[idx[keep]].reset_index(drop=True)
     out["cell"] = flat[keep]
-    out["ring"] = np.tile(cheb, n)[keep].astype(np.int32)
-    return spark.createDataFrame(out)
+    return out
 
 
 def min_cell_km(res: int, max_abs_lat: float) -> float:
@@ -216,23 +208,6 @@ def _reduce_dup_coord_places(places_pdf, *, place_lat: str, place_lon: str,
     return places_pdf
 
 
-def _candidate_struct(place_lat: str, place_lon: str, tiebreak: str,
-                      place_cols: list[str]) -> Column:
-    return F.struct(
-        F.col(place_lat).alias("plat"), F.col(place_lon).alias("plon"),
-        F.col(tiebreak).alias("tb"),
-        *[F.col(c).alias(c) for c in place_cols if c != tiebreak])
-
-
-def _best_over(array_col: str, lat_col: str, lon_col: str, tiebreak: str,
-               place_cols: list[str]) -> Column:
-    dist_sql = _haversine_places_sql(lat_col, lon_col)
-    payload = ", ".join(["p.tb AS tb",
-                         *[f"p.{c} AS {c}" for c in place_cols if c != tiebreak]])
-    return F.expr(
-        f"array_min(transform({array_col}, p -> struct({dist_sql} AS d, {payload})))")
-
-
 def knn_join(spark: SparkSession, queries: DataFrame, places_pdf, *,
              query_id: str, lat_col: str = "lat", lon_col: str = "lon",
              place_lat: str = "latitude", place_lon: str = "longitude",
@@ -258,63 +233,13 @@ def knn_join(spark: SparkSession, queries: DataFrame, places_pdf, *,
     (silently ignoring it would hand back a different ring than asked
     for); pin an int res to control k (default 1).
     """
-    if place_cols is None:
-        place_cols = [c for c in places_pdf.columns if c not in (place_lat, place_lon)]
-    tiebreak = place_cols[0]
-    places_pdf = _reduce_dup_coord_places(
-        places_pdf, place_lat=place_lat, place_lon=place_lon,
-        tiebreak=tiebreak)
-    if res == "auto":
-        if k is not None:
-            raise ValueError("res='auto' derives BOTH res and k from the "
-                             "place spacing; pass an explicit res to pin k")
-        res, k = auto_ring(places_pdf, lat_col=place_lat, lon_col=place_lon)
-    elif k is None:
-        k = 1
-
-    exploded = explode_places_by_kring(
-        spark, places_pdf, lat_col=place_lat, lon_col=place_lon, res=res, k=k)
-    grouped = exploded.groupBy("cell").agg(
-        F.collect_list(_candidate_struct(place_lat, place_lon, tiebreak,
-                                         place_cols)).alias("__places"))
-
-    # one-row DF carrying ALL places as a single array — the brute-force
-    # fallback operand (same broadcast payload the round-1 tail used, now
-    # fused into the per-row CASE instead of a separate plan + union).
-    # Measured (round 3, VERDICT round-2 item 4): 2M query rows × 500
-    # places on 32 cores = 0.4 s end-to-end — the CASE's lazy branch means
-    # settled rows never evaluate the array fold, and codegen pipelines the
-    # broadcast row reference without copying the array into output rows
-    # (it is projected away before any materialization boundary).  The cap
-    # that matters is the BROADCAST size of the places table itself, which
-    # binds every kNN variant here equally; beyond broadcast scale, switch
-    # to a cell-bucketed shuffle join on the k-ring (same explode, join on
-    # cell instead of broadcast) — the fallback residual then routes
-    # through a pair of per-row nearest cells rather than a global array.
-    all_places = (spark.createDataFrame(places_pdf)
-                  .agg(F.collect_list(
-                      _candidate_struct(place_lat, place_lon, tiebreak,
-                                        place_cols)).alias("__all")))
-
-    q = queries.withColumn("__cell", cell_expr(F.col(lat_col), F.col(lon_col), res))
-    joined = (q.join(F.broadcast(grouped), q["__cell"] == grouped["cell"], "left")
-              .drop("cell")
-              .crossJoin(F.broadcast(all_places)))
-
-    ring_best = _best_over("__places", lat_col, lon_col, tiebreak, place_cols)
-    brute_best = _best_over("__all", lat_col, lon_col, tiebreak, place_cols)
-    guard = guard_km_col(F.col(lat_col), res=res, k=k)
-
-    out = joined.withColumn("__rb", ring_best)
-    settled = F.col("__rb").isNotNull() & (F.col("__rb.d") <= guard)
-    out = out.withColumn("__best", F.when(settled, F.col("__rb"))
-                         .otherwise(brute_best))
-    return out.select(
-        *[c for c in queries.columns],
-        F.col("__best.tb").alias(tiebreak),
-        *[F.col(f"__best.{c}").alias(c) for c in place_cols if c != tiebreak],
-        F.col("__best.d").alias("knn_dist_km"),
-    )
+    if res == "auto" and k is not None:
+        raise ValueError("res='auto' derives BOTH res and k from the "
+                         "place spacing; pass an explicit res to pin k")
+    return _ring_plan(spark, queries, places_pdf, lat_col=lat_col,
+                      lon_col=lon_col, place_lat=place_lat,
+                      place_lon=place_lon, place_cols=place_cols,
+                      res=res, k=k, guarded=True)
 
 
 def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
@@ -331,12 +256,28 @@ def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
     :func:`max_nn_spacing_km`; the flagship does, and falls back to
     :func:`knn_join` when the check fails).  Queries with no candidate in the
     ring are dropped; use :func:`knn_join` when coverage is unknown.
+    Streaming/foreachBatch-safe (no actions).
+    """
+    return _ring_plan(spark, queries, places_pdf, lat_col=lat_col,
+                      lon_col=lon_col, place_lat=place_lat,
+                      place_lon=place_lon, place_cols=place_cols,
+                      res=res, k=k, guarded=False)
 
-    Plan shape: the small side is pre-grouped per covering cell into an
-    ``array<struct(lat, lon, payload…)>`` and broadcast; each query row joins
-    its own cell's candidate array (1 row in → 1 row out — NO explode) and
-    picks the nearest with ``array_min(transform(...))`` in whole-stage
-    codegen.  Streaming/foreachBatch-safe (no actions).
+
+def _ring_plan(spark: SparkSession, queries: DataFrame, places_pdf, *,
+               lat_col: str, lon_col: str, place_lat: str, place_lon: str,
+               place_cols: list[str] | None, res: int | str, k: int | None,
+               guarded: bool) -> DataFrame:
+    """The k-ring plan both kNN joins run.
+
+    The small side is exploded by k-ring on the driver, then grouped per
+    covering cell into an ``array<struct(lat, lon, payload…)>`` over a
+    one-partition dim (no shuffle) and broadcast; each query row joins its
+    own cell's candidate array (1 row in → 1 row out — NO explode) and picks
+    the nearest with ``array_min(transform(...))`` in whole-stage codegen.
+    ``guarded`` left-joins instead and resolves rows failing the per-row
+    exactness guard against the full places array; without it, rows with no
+    in-ring candidate are dropped.
     """
     if place_cols is None:
         place_cols = [c for c in places_pdf.columns if c not in (place_lat, place_lon)]
@@ -344,27 +285,50 @@ def knn_join_static(spark: SparkSession, queries: DataFrame, places_pdf, *,
     places_pdf = _reduce_dup_coord_places(
         places_pdf, place_lat=place_lat, place_lon=place_lon,
         tiebreak=tiebreak)
+    if res == "auto":
+        res, k = auto_ring(places_pdf, lat_col=place_lat, lon_col=place_lon)
+    elif k is None:
+        k = 1
 
-    exploded = explode_places_by_kring(
-        spark, places_pdf, lat_col=place_lat, lon_col=place_lon, res=res, k=k)
-    grouped = exploded.groupBy("cell").agg(
-        F.collect_list(_candidate_struct(place_lat, place_lon, tiebreak,
-                                         place_cols)).alias("__places"))
+    payload = [c for c in place_cols if c != tiebreak]
+    cand = F.struct(F.col(place_lat).alias("plat"),
+                    F.col(place_lon).alias("plon"),
+                    F.col(tiebreak).alias("tb"), *map(F.col, payload))
+    grouped = (local_dim_df(spark, _ring_cells_pdf(
+                   places_pdf, lat_col=place_lat, lon_col=place_lon,
+                   res=res, k=k))
+               .groupBy("cell").agg(F.collect_list(cand).alias("__places")))
+
+    def best_over(array_col: str) -> Column:
+        fields = ", ".join(f"p.{c} AS {c}" for c in ["tb", *payload])
+        d = haversine_sql(lat_col, lon_col, "p.plat", "p.plon")
+        return F.expr(f"array_min(transform({array_col}, "
+                      f"p -> struct({d} AS d, {fields})))")
 
     q = queries.withColumn("__cell", cell_expr(F.col(lat_col), F.col(lon_col), res))
-    joined = q.join(F.broadcast(grouped), q["__cell"] == grouped["cell"], "inner")
+    joined = q.join(F.broadcast(grouped), q["__cell"] == grouped["cell"],
+                    "left" if guarded else "inner").drop("cell")
+    best = best_over("__places")
 
-    best = _best_over("__places", lat_col, lon_col, tiebreak, place_cols)
-    out = joined.withColumn("__best", best)
-    return out.select(
-        *[c for c in queries.columns],
+    if guarded:
+        # one-row DF carrying ALL places as a single array — the
+        # brute-force fallback operand of the per-row CASE.  Measured
+        # (round 3): 2M query rows × 500 places on 32 cores = 0.4 s
+        # end-to-end — settled rows never evaluate the lazy branch's array
+        # fold, and the broadcast array is projected away before any
+        # materialization boundary.  The cap that binds is the broadcast
+        # size of the places table, for every kNN variant here alike.
+        all_places = local_dim_df(spark, places_pdf).agg(
+            F.collect_list(cand).alias("__all"))
+        joined = (joined.crossJoin(F.broadcast(all_places))
+                  .withColumn("__rb", best))
+        settled = (F.col("__rb").isNotNull()
+                   & (F.col("__rb.d") <= guard_km_col(F.col(lat_col),
+                                                      res=res, k=k)))
+        best = F.when(settled, F.col("__rb")).otherwise(best_over("__all"))
+    return joined.withColumn("__best", best).select(
+        *queries.columns,
         F.col("__best.tb").alias(tiebreak),
-        *[F.col(f"__best.{c}").alias(c) for c in place_cols if c != tiebreak],
+        *[F.col(f"__best.{c}").alias(c) for c in payload],
         F.col("__best.d").alias("knn_dist_km"),
     )
-
-
-def _haversine_places_sql(lat_col: str, lon_col: str) -> str:
-    from ..geo.distance import haversine_sql
-
-    return haversine_sql(lat_col, lon_col, "p.plat", "p.plon")

@@ -8,10 +8,11 @@ assigned the admin polygon containing it.  Scalable plan:
 2. points (10^12 side) compute their cell in Column algebra and broadcast
    equi-join → candidate (point, poly_id) pairs.  Non-overlapping admin
    tilings yield ~1 candidate per point (plus bbox false positives);
-3. exact refinement inside an Arrow-batched pandas UDF: polygons ship to
-   executors once as a Spark broadcast of raw WKB (pickle-cheap); each
-   executor lazily prepares edge arrays (PreparedGeometry) and caches them
-   process-wide, then tests whole batches vectorized (no per-row Python).
+3. exact refinement inside an Arrow-batched pandas UDF: each polygon is
+   prepared once on the driver (edge arrays, ``PreparedGeometry``) and the
+   prepared dict ships to executors as this call's own Spark broadcast, so
+   two calls over different polygon sets never share state; each batch is
+   tested vectorized (no per-row Python).
 
 No shuffle touches the big side at any step — the only wide operation is the
 broadcast itself.
@@ -27,35 +28,28 @@ from pyspark.sql.types import BooleanType
 
 from ..functions.geo import cell_expr
 from ..geo import grid, pip
-
-# executor-local cache: per-pip_join-call key → {poly_id: PreparedGeometry}.
-# Keyed by a driver-side monotonic counter captured in the UDF closure (one
-# key per pip_join call, never recycled), NOT ``id(bc.value)`` — Python
-# object ids ARE recycled after GC, so a long-lived executor serving several
-# pip_join calls could silently hit a stale entry and test points against the
-# wrong polygon set (ADVICE.md round-1 item 3).  Bounded: oldest entries
-# evicted beyond _CACHE_MAX.
-import itertools
-
-_PREPARED_CACHE: dict[int, dict] = {}
-_CACHE_MAX = 8
-_CALL_COUNTER = itertools.count()
+from ..session import local_dim_df
 
 
 def polygon_cells_pdf(polys_pdf: pd.DataFrame, *, id_col: str,
                       wkb_col: str = "geometry_wkb",
                       res: int = grid.DEFAULT_RES) -> pd.DataFrame:
     """(cell, poly_id) covering table — driver-side numpy, small side only."""
-    rows_cell: list[np.ndarray] = []
-    rows_id: list[np.ndarray] = []
-    for pid, buf in zip(polys_pdf[id_col], polys_pdf[wkb_col]):
-        g = pip.PreparedGeometry(bytes(buf))
-        cells = grid.covering_cells(g.lat_min, g.lat_max, g.lon_min, g.lon_max, res)
-        rows_cell.append(cells)
-        rows_id.append(np.full(len(cells), pid, dtype=object))
+    return _cover_pdf(_prepare(polys_pdf, id_col, wkb_col), id_col, res)
+
+
+def _prepare(polys_pdf: pd.DataFrame, id_col: str, wkb_col: str) -> dict:
+    return {pid: pip.PreparedGeometry(bytes(buf))
+            for pid, buf in zip(polys_pdf[id_col], polys_pdf[wkb_col])}
+
+
+def _cover_pdf(prepared: dict, id_col: str, res: int) -> pd.DataFrame:
+    cells = [grid.covering_cells(g.lat_min, g.lat_max, g.lon_min, g.lon_max, res)
+             for g in prepared.values()]
     return pd.DataFrame({
-        "cell": np.concatenate(rows_cell),
-        id_col: np.concatenate(rows_id),
+        "cell": np.concatenate(cells),
+        id_col: np.repeat(np.array(list(prepared), dtype=object),
+                          [len(c) for c in cells]),
     })
 
 
@@ -73,17 +67,13 @@ def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
     if attr_cols is None:
         attr_cols = [c for c in polys_pdf.columns if c not in (id_col, wkb_col)]
 
-    cover = spark.createDataFrame(polygon_cells_pdf(polys_pdf, id_col=id_col,
-                                                    wkb_col=wkb_col, res=res))
-    bc = spark.sparkContext.broadcast(
-        {pid: bytes(buf) for pid, buf in zip(polys_pdf[id_col], polys_pdf[wkb_col])})
-    call_key = next(_CALL_COUNTER)  # closure-captured, unique per call
+    prepared = _prepare(polys_pdf, id_col, wkb_col)
+    cover = local_dim_df(spark, _cover_pdf(prepared, id_col, res))
+    bc = spark.sparkContext.broadcast(prepared)
 
     @F.pandas_udf(BooleanType())
     def contains_udf(pid: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        if call_key not in _PREPARED_CACHE and len(_PREPARED_CACHE) >= _CACHE_MAX:
-            _PREPARED_CACHE.pop(next(iter(_PREPARED_CACHE)))
-        cache = _PREPARED_CACHE.setdefault(call_key, {})
+        geoms = bc.value
         out = np.zeros(len(pid), dtype=bool)
         lon_np = lon.to_numpy(dtype=np.float64)
         lat_np = lat.to_numpy(dtype=np.float64)
@@ -102,11 +92,7 @@ def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
             np.concatenate(([True], spid[1:] != spid[:-1])))
         for s, e in zip(starts, np.append(starts[1:], len(spid))):
             idx = order[s:e]
-            p = spid[s]
-            geom = cache.get(p)
-            if geom is None:
-                geom = cache[p] = pip.PreparedGeometry(bc.value[p])
-            out[idx] = geom.contains(lon_np[idx], lat_np[idx])
+            out[idx] = geoms[spid[s]].contains(lon_np[idx], lat_np[idx])
         return pd.Series(out)
 
     pts = points.withColumn("__cell", cell_expr(F.col(lat_col), F.col(lon_col), res))
@@ -115,6 +101,6 @@ def pip_join(spark: SparkSession, points: DataFrame, polys_pdf: pd.DataFrame, *,
            .drop("__cell", "cell"))
 
     if attr_cols:
-        attrs = spark.createDataFrame(polys_pdf[[id_col, *attr_cols]])
+        attrs = local_dim_df(spark, polys_pdf[[id_col, *attr_cols]])
         hit = hit.join(F.broadcast(attrs), id_col, "left")
     return hit

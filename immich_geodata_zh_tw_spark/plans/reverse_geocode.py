@@ -30,23 +30,26 @@ from ..operators.pipjoin import pip_join
 from ..synth import TW_BBOX
 
 
+# res 10 ⇒ k=1 exactness guard ≈ 17.6 km > the 12.2 km worst-case
+# nearest-centroid distance of the village tiling, so virtually every row
+# settles in the zero-shuffle static path — one broadcast join + codegen.
+# KNN_RES decouples the kNN ring grid from the PIP prefilter grid; both are
+# 10 because an INTERLEAVED same-session A/B (noop-measured, 2 M pages/32
+# cores) put knn_res=12 k=3 at 3.79 s vs 3.13 s here, even though the kNN
+# stage ALONE measured faster at 12/3 (0.93 vs 1.30 s over uniform
+# synthetic points) — sharing res lets the per-row cell encode CSE across
+# the PIP and kNN joins, and the 9-entry ring map beats the 49-entry one on
+# broadcast build+probe.
+PIP_RES = 10
+KNN_RES = 10
+KNN_K = 1
+#: the country every in-bbox page is localized to
+COUNTRY_CODE = "TW"
+
+
 def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
-                          polys_pdf: pd.DataFrame, cities_pdf: pd.DataFrame, *,
-                          bbox: tuple[float, float, float, float] = TW_BBOX,
-                          country_code: str = "TW",
-                          res: int = 10, knn_res: int = 10,
-                          knn_k: int = 1) -> DataFrame:
-    # res 10 ⇒ k=1 exactness guard ≈ 17.6 km > the 12.2 km worst-case
-    # nearest-centroid distance of the village tiling, so virtually every
-    # row settles in the zero-shuffle static path — one broadcast join +
-    # codegen.  knn_res decouples the kNN ring grid from the PIP prefilter
-    # grid; both default to 10 because an INTERLEAVED same-session A/B
-    # (noop-measured, 2 M pages/32 cores) put knn_res=12 k=3 at 3.79 s vs
-    # 3.13 s here, even though the kNN stage ALONE measured faster at 12/3
-    # (0.93 vs 1.30 s over uniform synthetic points) — sharing res lets the
-    # per-row cell encode CSE across the PIP and kNN joins, and the 9-entry
-    # ring map beats the 49-entry one on broadcast build+probe.  The knob
-    # exists for place tables whose spacing genuinely demands another grid.
+                          polys_pdf: pd.DataFrame,
+                          cities_pdf: pd.DataFrame) -> DataFrame:
     """Full reverse-geocode of a pages table against polygon + point tables."""
     # geo-only kernel: this plan never outputs text, and pruning cannot
     # reach inside mapInPandas — the text pass (tag-strip + entities + ws
@@ -54,7 +57,7 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
     # dropped, and at a global corpus vs a Taiwan bbox that is ~all of it
     pts = (extract_pages(pages, with_text=False)
            .filter(F.col("lat").isNotNull() & F.col("lon").isNotNull())
-           .filter(in_bbox(F.col("lat"), F.col("lon"), bbox))
+           .filter(in_bbox(F.col("lat"), F.col("lon"), TW_BBOX))
            # explicit exchange: (a) separates the extract mapInPandas and the
            # PIP pandas UDF into different stages — chaining two Python
            # workers inside one task pipeline doubles Python-process
@@ -78,11 +81,12 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
     polys.insert(0, "poly_id", range(len(polys)))
     with_admin = pip_join(
         spark, pts, polys[["poly_id", "geometry_wkb", "county", "township", "village"]],
-        id_col="poly_id", attr_cols=["county", "township", "village"], res=res,
+        id_col="poly_id", attr_cols=["county", "township", "village"],
+        res=PIP_RES,
     ).drop("poly_id")
 
     # exactness precondition for the static (single-pass, action-free) kNN:
-    # the k-ring at `res` must cover the worst-case nearest-centroid distance
+    # the k-ring at KNN_RES must cover the worst-case nearest-centroid distance
     # of the cities table.  We MEASURE that from the data: the max nearest-
     # neighbor spacing of the (driver-resident) cities table is a covering-
     # radius proxy for tiling-derived point sets (adjacent tile centroids are
@@ -90,25 +94,17 @@ def reverse_geocode_pages(spark: SparkSession, pages: DataFrame,
     # When the check fails — sparse or irregular cities tables — fall back to
     # the general kNN join, whose per-row guard + full-array CASE fallback is
     # exact for any point set (VERDICT.md round-1 item 5 / ADVICE.md item 2).
-    guard_km = knn_k * min_cell_km(knn_res,
-                                   max(abs(bbox[0]), abs(bbox[1])) + 1.0)
-    spacing_km = max_nn_spacing_km(cities_pdf)
-    if spacing_km <= guard_km:
-        named = knn_join_static(
-            spark, with_admin, cities_pdf, query_id="url",
-            place_cols=["geoname_id", "name", "admin1_code"],
-            res=knn_res, k=knn_k)
-    else:
-        named = knn_join(
-            spark, with_admin, cities_pdf, query_id="url",
-            place_cols=["geoname_id", "name", "admin1_code"],
-            res=knn_res, k=knn_k)
+    guard_km = KNN_K * min_cell_km(
+        KNN_RES, max(abs(TW_BBOX[0]), abs(TW_BBOX[1])) + 1.0)
+    join = (knn_join_static if max_nn_spacing_km(cities_pdf) <= guard_km
+            else knn_join)
+    named = join(spark, with_admin, cities_pdf, query_id="url",
+                 place_cols=["geoname_id", "name", "admin1_code"],
+                 res=KNN_RES, k=KNN_K)
     # localized country display name (reference i18n-iso-countries zh-tw.json
-    # via Immich's display path, README.md:103) — broadcast dim join.
-    # country_code travels with bbox: a non-Taiwan invocation passes its own
-    # code and gets that country's zh-TW name (ADVICE.md round-2 item 5)
+    # via Immich's display path, README.md:103) — broadcast dim join
     localized = localize_country(
-        named.withColumn("country_code", F.lit(country_code)))
+        named.withColumn("country_code", F.lit(COUNTRY_CODE)))
     return localized.select(
         "url", "lat", "lon",
         cell_expr(F.col("lat"), F.col("lon"), grid.DEFAULT_RES).alias("cell"),

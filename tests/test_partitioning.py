@@ -67,6 +67,28 @@ class TestPartitionPruning:
                                      if 24 <= 20.0 + (i % 40) * 0.25 < 26)
 
 
+class TestLocalDimDf:
+    """``session.local_dim_df``: driver-side dims as one-partition frames."""
+
+    def test_bad_row_raises_on_driver_at_build(self, spark):
+        from pyspark.errors import PySparkTypeError
+        from immich_geodata_zh_tw_spark.session import local_dim_df
+
+        with pytest.raises(PySparkTypeError):
+            local_dim_df(spark, [("a", 1), ("b", "two")], "k string, v long")
+
+    def test_pandas_input_is_one_partition(self, spark):
+        from immich_geodata_zh_tw_spark.session import local_dim_df
+
+        pdf = pd.DataFrame({"k": list("abcdabcd"), "v": range(8)})
+        df = local_dim_df(spark, pdf)
+        assert df.rdd.getNumPartitions() == 1
+        assert sorted(map(tuple, df.collect())) == sorted(
+            zip(pdf["k"], pdf["v"]))
+        # its single partition already clusters any grouping key
+        assert "Exchange" not in _plan(df.groupBy("k").agg(F.sum("v")))
+
+
 class TestScaleSafeSessionDefaults:
     """Round-5 6.4M-doc stress findings (BENCH/BASELINE.md): the reduce
     side must be sized by data/advisory, not cores, and the advisory must

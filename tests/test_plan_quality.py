@@ -90,30 +90,32 @@ class TestPlanQuality:
         assert n_arrow <= 4, f"ArrowEvalPython appears {n_arrow}× (dup eval)"
 
     def test_flagship_single_wide_op(self, spark):
-        """The full reverse-geocode plan: no sort-merge join, and the ONLY
-        non-broadcast exchange is the single documented post-filter
-        repartition — the pages side is otherwise never shuffled."""
+        """The full reverse-geocode plan, on both kNN paths: no sort-merge
+        join, and the ONLY non-broadcast exchange is the single documented
+        post-filter repartition.  The pages side is otherwise never
+        shuffled, and every dim (PIP cover and attributes, kNN ring and
+        all-places tables, country names) is a one-partition frame, so
+        grouping or aggregating it plans no shuffle either."""
         import re
         from immich_geodata_zh_tw_spark.plans.reverse_geocode import \
             reverse_geocode_pages
         from immich_geodata_zh_tw_spark.synth import cities, pages, polygons
 
-        out = reverse_geocode_pages(
-            spark, pages.pages_df(spark, 100),
-            polygons.admin_polygons_pdf(village_grid=2),
-            cities.cities_pdf(village_grid=2))
-        plan = _plan(out)
-        assert "SortMergeJoin" not in plan
-        blocks = re.split(r"\n\n", plan)
-        shuffles = [b for b in blocks
-                    if re.match(r"\(\d+\) Exchange\b", b.strip())]
-        # pages-side rows (url/html/lat/lon) cross exactly ONE exchange — the
-        # documented post-filter repartition; any other shuffle may only
-        # touch dimension-sized sides (the cell→array place grouping)
-        pages_shuffles = [b for b in shuffles
-                          if re.search(r"\b(url|html)#", b)]
-        assert len(pages_shuffles) == 1, pages_shuffles
-        assert "RoundRobinPartitioning" in pages_shuffles[0]
+        # village_grid 5 takes the static kNN path, 2 the guarded one (its
+        # plan carries the all-places fallback array)
+        for village_grid, guarded in ((5, False), (2, True)):
+            out = reverse_geocode_pages(
+                spark, pages.pages_df(spark, 100),
+                polygons.admin_polygons_pdf(village_grid=village_grid),
+                cities.cities_pdf(village_grid=village_grid))
+            plan = _plan(out)
+            assert ("__all#" in plan) == guarded, village_grid
+            assert "SortMergeJoin" not in plan
+            shuffles = [b for b in re.split(r"\n\n", plan)
+                        if re.match(r"\(\d+\) Exchange\b", b.strip())]
+            assert len(shuffles) == 1, (village_grid, shuffles)
+            assert "RoundRobinPartitioning" in shuffles[0]
+            assert re.search(r"\burl#", shuffles[0])
 
     def test_parquet_scan_pruning(self, spark):
         """Filters and projections must reach the parquet scan."""

@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from immich_geodata_zh_tw_spark.geo import distance, grid, pip
+from immich_geodata_zh_tw_spark.geo import distance, grid, pip, wkb
 from immich_geodata_zh_tw_spark.operators import knn as knn_op
 from immich_geodata_zh_tw_spark.operators import pipjoin
 from immich_geodata_zh_tw_spark.synth import polygons
@@ -267,6 +267,38 @@ class TestPipJoin:
         assert got.get(0) == enc["poly_id"]
         assert got.get(2) == enc["poly_id"]
         assert 1 not in got  # gap belongs to no polygon
+
+    def test_calls_reusing_poly_ids_keep_their_own_geometry(self, spark):
+        """Two pip_join calls in one session over different polygon sets
+        that reuse the same poly_ids — and the same bboxes, so the same
+        cover cells — each assign points by their own geometry: a call's
+        prepared polygons travel in its own broadcast, so no state is
+        shared across calls."""
+        lo = wkb.encode_polygon([np.array(
+            [[121, 23], [122, 23], [122, 24], [121, 23]], dtype=float)])
+        hi = wkb.encode_polygon([np.array(
+            [[121, 23], [122, 24], [121, 24], [121, 23]], dtype=float)])
+        rng = np.random.default_rng(5)
+        lon, lat = rng.uniform(121, 122, 300), rng.uniform(23, 24, 300)
+        off_diag = np.abs((lon - 121) - (lat - 23)) > 1e-3
+        pts_pdf = pd.DataFrame({"pid": np.arange(off_diag.sum()),
+                                "lat": lat[off_diag], "lon": lon[off_diag]})
+        below = (pts_pdf["lat"] - 23 < pts_pdf["lon"] - 121).to_numpy()
+        pts = spark.createDataFrame(pts_pdf)
+        want = {"a": np.where(below, 0, 1), "b": np.where(below, 1, 0)}
+        outs = {name: pipjoin.pip_join(
+                    spark, pts, pd.DataFrame({"poly_id": [0, 1],
+                                              "geometry_wkb": geoms}),
+                    id_col="poly_id", res=9).withColumn("set", F.lit(name))
+                for name, geoms in (("a", [lo, hi]), ("b", [hi, lo]))}
+        # one after the other, then both in one job
+        for frame, names in ((outs["a"], "a"), (outs["b"], "b"),
+                             (outs["a"].unionByName(outs["b"]), "ab")):
+            got = frame.toPandas()
+            for name in names:
+                part = got[got["set"] == name].sort_values("pid")
+                assert part["pid"].tolist() == pts_pdf["pid"].tolist()
+                assert part["poly_id"].tolist() == want[name].tolist(), name
 
 
 class TestRasterVector:
